@@ -6,8 +6,11 @@ finds the same request/response shapes here (citations into
 /root/reference/):
 
   get_docs         GET /getDocs    DocumentController.scala:276-346
-                   (ranked top-k + pagination + whole-doc highlighting
-                   + metadata enrichment in one Spark plan)
+                   (ranked page and its total from ONE shard pass —
+                   per-shard top-k heaps plus exact per-shard hit
+                   counts, the ES query phase — then one body fetch
+                   for the page with whole-doc highlighting and
+                   metadata enrichment)
   induce_subgraph  GET /induceSubgraph  NetworkController →
                    NetworkService.scala:136-175 — node facet + ALL
                    edges in one self-join job instead of O(n²)
@@ -22,8 +25,9 @@ Request parsing reuses the F8 grammars (query_string with quoted
 phrases, 4-regex time ranges); the doc-set filter for aggregation
 endpoints carries the same bool-query semantics the reference applies
 to every aggregation request — served from the index when one is built
-(engine.matching_doc_ids posting intersection + semi-join; no text
-re-tokenization) and by query/brute.matching_docs otherwise. Results
+(engine.matching_doc_ids: the shard pass emitting ids, semi-joined
+back with a size-bounded join hint; no text re-tokenization) and by
+query/brute.matching_docs otherwise. Results
 are plain Python dicts (the JSON the controllers emit); every
 .collect() here is bounded by page/facet size, never by collection
 size.
@@ -41,6 +45,7 @@ from newsleak_spark.analysis import analyze
 from newsleak_spark.query.brute import bm25_topk, matching_docs
 from newsleak_spark.query.engine import (
     count_hits,
+    heap_total,
     index_state_key,
     matching_doc_ids,
     search,
@@ -90,24 +95,33 @@ def compile_spec(
 
 
 def _merge_heaps(hrows: list, k: int) -> tuple[list, float]:
-    """Merge collected per-shard heap rows (shard, doc_id, score_e6)
-    into the global ranking and the rank through which it is exact.
+    """Merge collected per-shard heap rows (shard, doc_id, score_e6,
+    hits) into the global ranking and the rank through which it is
+    exact.
 
-    A doc a TRUNCATED shard (one that returned exactly k rows) did not
-    return ranks strictly after that shard's weakest returned key, so
-    the merge is exact through every position whose key sorts <= the
-    minimum truncated-shard boundary key; with no truncated shard the
-    heaps are exhaustive and the whole merge is exact."""
+    A shard is TRUNCATED when its exact match count exceeds the rows it
+    returned (unknown count: when it returned k rows). A doc a
+    truncated shard did not return ranks strictly after that shard's
+    weakest returned key, so the merge is exact through every position
+    whose key sorts <= the minimum truncated-shard boundary key; with no
+    truncated shard the heaps are exhaustive and the whole merge is
+    exact."""
     per_shard: dict[int, int] = {}
+    hits: dict[int, int | None] = {}
     boundary: dict[int, tuple[int, int]] = {}
     for r in hrows:
         s = r["shard"]
         per_shard[s] = per_shard.get(s, 0) + 1
+        hits[s] = r["hits"]
         key = (-r["score_e6"], r["doc_id"])
         if s not in boundary or key > boundary[s]:
             boundary[s] = key
     merged = sorted(hrows, key=lambda r: (-r["score_e6"], r["doc_id"]))
-    truncated = [boundary[s] for s, n in per_shard.items() if n >= k]
+    truncated = [
+        boundary[s]
+        for s, n in per_shard.items()
+        if (n >= k if hits[s] is None else hits[s] > n)
+    ]
     if not truncated:
         return merged, float("inf")
     cut = min(truncated)
@@ -158,7 +172,7 @@ class NewsleakAPI:
         self.transcripts = transcripts
         self.index_dir = index_dir
         self.mode = mode
-        self._hit_cache: dict[tuple, tuple[list, float]] = {}
+        self._hit_cache: dict[tuple, tuple[list, float, int | None]] = {}
         self._agg_cache: dict[tuple, dict] = {}
         self.topk_runs = 0  # observability: ranked scans actually executed
         self.agg_runs = 0  # observability: aggregation jobs actually executed
@@ -179,15 +193,18 @@ class NewsleakAPI:
         """Ranked page of documents with highlighting + metadata.
 
         Pagination = top-(page·size) then slice (T2: SearchHitIterator
-        re-issues with from=consumed; one growing top-k is the
-        distributed equivalent). Highlight: whole doc, <em> tags
+        re-issues with from=consumed); on the indexed path the page and
+        its total come from ONE collected search_heaps pass (per-shard
+        heaps plus exact per-shard hit counts), cached per query so
+        later pages — with or without the total — are driver-side
+        slices. Highlight: whole doc, <em> tags
         (DocumentService.scala:406-418) — ES-faithful ANALYZED-term
         matching: a surface word is highlighted when its analyzed form
         is a query term, so english-mode 'databases' highlights for the
         stem query 'databas'. Runs driver-side over the <= page_size
-        returned bodies only. ``with_total``: on the indexed path the
-        count comes from the index alone (engine.count_hits, no text
-        scan); brute fallback pays one matching_docs scan."""
+        returned bodies only. ``with_total``: match_all / filters-only
+        specs count docmeta (engine.count_hits, no text scan); the brute
+        fallback pays one matching_docs scan."""
         try:
             spec = compile_spec(query, time_range, roles, tools, k=page * page_size, mode=self.mode)
         except ValueError as e:
@@ -195,7 +212,8 @@ class NewsleakAPI:
         # boost (should) terms highlight too — the ES highlighter wraps
         # every query term incl. should clauses (DocumentService.scala:406-418)
         targets = set(spec.all_scored_terms()) | set(spec.boost_terms)
-        rows = self._ranked_rows(spec)[(page - 1) * page_size :]
+        rows, total = self._ranked_rows(spec, with_total)
+        rows = rows[(page - 1) * page_size :]
         ids = [r["doc_id"] for r in rows]
         scores = {r["doc_id"]: r["score_e6"] / 1e6 for r in rows}
         docs: list[dict] = []
@@ -227,13 +245,7 @@ class NewsleakAPI:
                         },
                     }
                 )
-        total = None
-        if with_total:
-            if self.index_dir is not None:
-                total = count_hits(self.spark, self.index_dir, spec)
-            else:
-                total = matching_docs(self.transcripts, spec, self.mode).count()
-        return {"hits": total, "page": page, "docs": docs}
+        return {"hits": total if with_total else None, "page": page, "docs": docs}
 
     # -- GET /induceSubgraph ----------------------------------------------
 
@@ -350,14 +362,15 @@ class NewsleakAPI:
             return search(self.spark, self.index_dir, spec)
         return bm25_topk(self.transcripts, spec, mode=self.mode)
 
-    def _ranked_rows(self, spec: QuerySpec) -> list:
-        """Collected top-k rows for the spec, cache-aware: keyed by the
-        spec NORMALIZED WITHOUT k, so any page whose rank is provably
-        exact from an already-collected run is served driver-side.
-        Indexed path: ONE search_heaps scan caches every shard's top-k
-        (n_shards·k rows, bounded); the merged list answers pages up to
-        the exactness bound — typically many pages — before any re-run.
-        Bounded FIFO."""
+    def _ranked_rows(self, spec: QuerySpec, with_total: bool = False) -> tuple[list, int | None]:
+        """(collected top-k rows, total or None) for the spec, cache-
+        aware: keyed by the spec NORMALIZED WITHOUT k, so any page whose
+        rank is provably exact from an already-collected run is served
+        driver-side. Indexed path: ONE search_heaps scan caches every
+        shard's top-k (n_shards·k rows, bounded) and, when known, the
+        total; the merged list answers pages up to the exactness bound —
+        typically many pages — before any re-run. A total the cached
+        entry lacks is computed once and stored with it. Bounded FIFO."""
         from dataclasses import replace
 
         # the index state rides in the key: append_index/compaction on
@@ -366,27 +379,35 @@ class NewsleakAPI:
         state = index_state_key(self.index_dir) if self.index_dir is not None else None
         key = (replace(spec, k=0).cache_key(), state)
         cached = self._hit_cache.get(key)
-        if cached is not None:
-            rows, safe_rank = cached
-            # answerable iff the merge is exact through spec.k, or the
-            # result set is exhausted (fewer rows than the bound allows)
-            if spec.k <= safe_rank or len(rows) < safe_rank:
-                return rows[: spec.k]
-        self.topk_runs += 1
-        if self.index_dir is not None:
-            heaps = search_heaps(self.spark, self.index_dir, spec)
+        # answerable iff the merge is exact through spec.k, or the
+        # result set is exhausted (fewer rows than the bound allows)
+        if cached is not None and (spec.k <= cached[1] or len(cached[0]) < cached[1]):
+            rows, safe_rank, total = cached
         else:
+            self.topk_runs += 1
             heaps = None
-        if heaps is not None:
-            rows, safe_rank = _merge_heaps(heaps.collect(), spec.k)
-        else:
-            # brute / match_all fallback: plain top-k, exact through k
-            rows = self._topk(spec).collect()
-            safe_rank = float("inf") if len(rows) < spec.k else spec.k
-        if len(self._hit_cache) >= self.HIT_CACHE_MAX:
+            if self.index_dir is not None:
+                heaps = search_heaps(self.spark, self.index_dir, spec, with_total=with_total)
+            if heaps is not None:
+                hrows = heaps.collect()
+                rows, safe_rank = _merge_heaps(hrows, spec.k)
+                total = heap_total(hrows)
+            else:
+                # brute / match_all fallback: plain top-k, exact through k
+                rows = self._topk(spec).collect()
+                safe_rank = float("inf") if len(rows) < spec.k else spec.k
+                total = None
+            if total is None and cached is not None:
+                total = cached[2]  # a total does not depend on k
+        if with_total and total is None:
+            if self.index_dir is not None:
+                total = count_hits(self.spark, self.index_dir, spec)
+            else:
+                total = matching_docs(self.transcripts, spec, self.mode).count()
+        if cached is None and len(self._hit_cache) >= self.HIT_CACHE_MAX:
             self._hit_cache.pop(next(iter(self._hit_cache)))
-        self._hit_cache[key] = (rows, safe_rank)
-        return rows[: spec.k]
+        self._hit_cache[key] = (rows, safe_rank, total)
+        return rows[: spec.k], total
 
     def _agg_cached(self, key: tuple, compute, spec: QuerySpec):
         """Aggregation result memo (facet/timeline/network): bounded
@@ -414,8 +435,10 @@ class NewsleakAPI:
 
     def _matching(self, spec: QuerySpec) -> DataFrame:
         """Query-filtered doc set for aggregation endpoints. Indexed
-        path: posting-list intersection supplies the doc ids (no text
-        re-tokenization), semi-joined back for the facet columns."""
+        path: the shard pass supplies the doc ids (no text
+        re-tokenization), semi-joined back for the facet columns — a
+        broadcast only when the ids' dictionary-df bound fits the
+        broadcast threshold (engine._hinted_ids)."""
         if self.index_dir is not None and (spec.all_scored_terms() or spec.boost_terms):
             ids = matching_doc_ids(self.spark, self.index_dir, spec)
             return self.transcripts.join(ids, "doc_id", "left_semi")

@@ -1,15 +1,21 @@
 """Segment-based BM25 query engine (the Elasticsearch replacement).
 
-Execution shape (SURVEY §3.1 "Rebuild shape"):
+Execution shape (SURVEY §3.1 "Rebuild shape"), one shuffle-free shard
+pass per request — Elasticsearch's query phase, where every shard
+returns its top-k heap and its total hit count together:
   parse → QuerySpec → dictionary lookup (df/idf per query term,
-  partition-pruned parquet point reads) → segment scan filtered to
-  (bucket ∈ query buckets, term ∈ query terms) — parquet PARTITION
-  pruning on bucket + row-group stats pruning on the term-sorted rows —
-  → per-shard scoring in applyInPandas over Arrow batches (numpy
-  decode, block-range intersection for AND, block-max WAND for the
-  scored-union path; F2/F5 filters arrive shard-locally via cogroup
-  with the filtered docmeta) → per-shard top-k heaps → global
-  TakeOrderedAndProject merge.
+  partition-pruned pyarrow point reads) → driver lists each shard's
+  segment files for the query terms' buckets (every part: base plus
+  deltas) → ``spark.range(n_shards)`` → ``mapInArrow``: each task reads
+  its shards' files with pyarrow (``term`` predicate pushed to the
+  row groups of the term-sorted layout, position columns only for
+  phrases), filters the shard's docmeta itself for F2/F5 filters, and
+  scores the shard (numpy decode, block-range intersection for AND,
+  block-max WAND for the scored-union path) → per shard: top-k rows
+  plus the exact pre-truncation match count ``hits`` → driver-side
+  merge (``search``: TakeOrderedAndProject; the serving layer: merged
+  heaps). No Exchange: the shard frame is JVM-side and the segments
+  never leave the task that reads them.
 
 Correctness contract: rank-identical (doc_id, score_e6) vs
 query/brute.py (and hence vs the DuckDB oracle) — enforced by
@@ -21,7 +27,7 @@ recomputed at query time (§7.5.3).
 
 from __future__ import annotations
 
-from dataclasses import dataclass
+from dataclasses import dataclass, replace
 
 import numpy as np
 import pandas as pd
@@ -90,6 +96,7 @@ class IndexReader:
         self.n_docs = float(n)
         self.avgdl = sum_dl / n if n else 0.0
         self.n_buckets = int(self.man.config["n_term_buckets"])
+        self.n_shards = int(self.man.config["n_shards"])
         # bigram-sidecar coverage: a pair (a,b) is covered — "bigram
         # absent ⇒ no adjacency anywhere" — only when EVERY part
         # extracted it, i.e. a,b are in the intersection of the parts'
@@ -103,7 +110,8 @@ class IndexReader:
             )
         else:
             self.bigram_cover = frozenset()
-        self._df_cache: dict[str, DataFrame] = {}
+        self._docmeta: DataFrame | None = None
+        self._files: dict[str, dict[int, list[tuple[int, str, int]]]] = {}
         self._pa_datasets: dict = {}
 
     def dictionary_rows(self, terms: list[str]) -> dict[str, tuple[int, int]]:
@@ -150,36 +158,47 @@ class IndexReader:
                     out[t] = (pd_ + int(d), pc + int(c))
         return out
 
-    def _union_parts(self, sub: str) -> DataFrame:
-        # memoized per reader: spark.read.parquet re-lists leaf files and
-        # re-reads footers on every call (a driver-serial job per query
-        # that no executor count can parallelize). The reader is already
-        # invalidated on any index mutation (_cached_reader keys on the
-        # manifest generation), so a cached lazy DataFrame is exactly as
-        # fresh as the reader itself; per-query filters stack on top and
-        # still prune partitions/row groups.
-        df = self._df_cache.get(sub)
-        if df is None:
-            dfs = [self.spark.read.parquet(f"{p}/{sub}") for p in self.parts]
+    def docmeta(self) -> DataFrame:
+        """docmeta of every part as one DataFrame (the match-all /
+        filters-only path). Memoized per reader: spark.read.parquet
+        re-lists leaf files and re-reads footers on every call, and the
+        reader is already invalidated on any index mutation
+        (_cached_reader keys on the manifest generation)."""
+        if self._docmeta is None:
+            dfs = [self.spark.read.parquet(f"{p}/docmeta") for p in self.parts]
             df = dfs[0]
             for d in dfs[1:]:
                 df = df.unionByName(d)
-            self._df_cache[sub] = df
-        return df
+            self._docmeta = df
+        return self._docmeta
 
-    def docmeta(self) -> DataFrame:
-        return self._union_parts("docmeta")
+    def shard_files(self, sub: str) -> dict[int, list[tuple[int, str, int]]]:
+        """shard → [(bucket, path, bytes)] of one stage's parquet files
+        across every part (bucket -1 for stages not partitioned by bucket).
+        Listed once per reader — the file set an Iceberg ``planFiles``
+        would hand the shard tasks — so no query re-walks the tree."""
+        import os
 
-    def segments_for(self, terms: list[str], with_positions: bool = True) -> DataFrame:
-        buckets = sorted({_bucket(t, self.n_buckets) for t in terms})
-        seg = self._union_parts("segments").filter(
-            F.col("bucket").isin(buckets) & F.col("term").isin(terms)
-        )
-        if not with_positions:
-            # positions live in separate columns precisely so term-only
-            # queries never pay their IO (SURVEY §7.5.5)
-            seg = seg.drop("poscnt", "posflat")
-        return seg
+        got = self._files.get(sub)
+        if got is None:
+            got = {}
+            for part in self.parts:
+                root = os.path.join(part, sub)
+                for dirpath, _dirs, files in os.walk(root):
+                    keys = dict(
+                        seg.split("=", 1)
+                        for seg in os.path.relpath(dirpath, root).split(os.sep)
+                        if "=" in seg
+                    )
+                    if "shard" not in keys:
+                        continue
+                    bucket = int(keys.get("bucket", -1))
+                    paths = [os.path.join(dirpath, f) for f in sorted(files) if f.endswith(".parquet")]
+                    got.setdefault(int(keys["shard"]), []).extend(
+                        (bucket, p, os.path.getsize(p)) for p in paths
+                    )
+            self._files[sub] = got
+        return got
 
 
 def _bucket(term: str, n_buckets: int) -> int:
@@ -192,8 +211,204 @@ def _bucket(term: str, n_buckets: int) -> int:
 
 
 # ---------------------------------------------------------------------------
-# per-shard scorer (runs inside applyInPandas over Arrow batches)
+# task-side reads of one shard (pyarrow over driver-listed files)
 # ---------------------------------------------------------------------------
+
+_SEG_COLUMNS = (
+    "term", "n", "doc_first", "doc_last", "max_tf", "max_score", "docs", "tfs", "dls",
+)
+_POS_COLUMNS = ("poscnt", "posflat")
+
+
+@dataclass(frozen=True)
+class MetaFilter:
+    """F2/F5 filters as plain values, applied to a shard's docmeta inside
+    the shard task. Same semantics as brute._apply_filters: role/tool
+    IN-lists (null never matches) and ``ts`` cast to a date in the
+    session time zone (``ts`` is a TimestampType instant,
+    TRANSCRIPT_SCHEMA), inclusive bounds as days since the epoch.
+    ``zone`` is the session zone as a fixed offset in seconds or a
+    region name."""
+
+    roles: tuple[str, ...] = ()
+    tools: tuple[str, ...] = ()
+    day_from: int | None = None
+    day_to: int | None = None
+    zone: int | str = 0
+
+    def columns(self) -> list[str]:
+        cols = ["doc_id"]
+        cols += ["role"] if self.roles else []
+        cols += ["tool"] if self.tools else []
+        cols += ["ts"] if self.day_from is not None or self.day_to is not None else []
+        return cols
+
+    def expression(self):
+        """role/tool IN-lists as a pyarrow predicate for the scan."""
+        import pyarrow.dataset as ds
+
+        expr = None
+        for col, vals in (("role", self.roles), ("tool", self.tools)):
+            if vals:
+                e = ds.field(col).isin(list(vals))
+                expr = e if expr is None else expr & e
+        return expr
+
+    def keep_ts(self, ts) -> np.ndarray:
+        """Mask of rows whose local date of ``ts`` lies in the bounds."""
+        import pyarrow as pa
+        import pyarrow.compute as pc
+
+        ts = ts.combine_chunks() if isinstance(ts, pa.ChunkedArray) else ts
+        unit = ts.type.unit
+        per_s = {"s": 1, "ms": 10**3, "us": 10**6, "ns": 10**9}[unit]
+        valid = pc.is_valid(ts).to_numpy(zero_copy_only=False)
+        v = pc.cast(ts, pa.int64()).fill_null(0).to_numpy()
+        if isinstance(self.zone, str):
+            # exact per-row local wall time (DST included), in ns
+            local = pd.to_datetime(v, unit=unit, utc=True).tz_convert(self.zone)
+            v, per_s = local.tz_localize(None).as_unit("ns").asi8, 10**9
+        else:
+            v = v + self.zone * per_s
+        days = np.floor_divide(v, 86400 * per_s)
+        keep = valid
+        if self.day_from is not None:
+            keep = keep & (days >= self.day_from)
+        if self.day_to is not None:
+            keep = keep & (days <= self.day_to)
+        return keep
+
+
+def _meta_filter(spark: SparkSession, spec: QuerySpec) -> MetaFilter | None:
+    """The spec's F2/F5 filters as a MetaFilter (None without filters).
+    The session time zone is resolved by Spark's own zone parser so
+    aliases (``GMT+8``, ``PST``) mean what they mean to a Spark cast."""
+    if not (spec.role_filter or spec.tool_filter or spec.ts_from or spec.ts_to):
+        return None
+    import datetime as dt
+    import re
+
+    zone: int | str = 0
+    if spec.ts_from or spec.ts_to:
+        tz = spark.conf.get("spark.sql.session.timeZone")
+        zid = (
+            spark._jvm.org.apache.spark.sql.catalyst.util.DateTimeUtils.getZoneId(tz)
+            .normalized()
+            .getId()
+        )
+        m = re.fullmatch(r"([+-])(\d\d):(\d\d)(?::(\d\d))?", zid)
+        if zid == "Z":
+            zone = 0
+        elif m:
+            secs = int(m[2]) * 3600 + int(m[3]) * 60 + int(m[4] or 0)
+            zone = secs if m[1] == "+" else -secs
+        else:
+            zone = zid
+    epoch = dt.date(1970, 1, 1)
+    return MetaFilter(
+        roles=tuple(spec.role_filter),
+        tools=tuple(spec.tool_filter),
+        day_from=(spec.ts_from - epoch).days if spec.ts_from else None,
+        day_to=(spec.ts_to - epoch).days if spec.ts_to else None,
+        zone=zone,
+    )
+
+
+@dataclass(frozen=True)
+class ShardScan:
+    """What one query reads, per shard, planned on the driver and shipped
+    to the shard tasks: the segment files of the query terms' buckets
+    in every part, the terms pushed into the scan, the columns (no
+    position columns unless the query has phrases) and, for filtered
+    queries, the shard's docmeta files with the filter. ``nbytes`` is
+    the size of every file it reads."""
+
+    seg_paths: dict[int, tuple[str, ...]]
+    terms: tuple[str, ...]
+    columns: tuple[str, ...]
+    nbytes: int
+    meta_paths: dict[int, tuple[str, ...]] | None = None
+    meta_filter: MetaFilter | None = None
+
+    @classmethod
+    def plan(
+        cls, rd: IndexReader, terms: list[str], with_positions: bool,
+        meta_filter: MetaFilter | None = None,
+    ) -> "ShardScan":
+        buckets = {_bucket(t, rd.n_buckets) for t in terms}
+        seg = {
+            s: [(p, n) for b, p, n in fs if b in buckets]
+            for s, fs in rd.shard_files("segments").items()
+        }
+        meta = None
+        if meta_filter is not None:
+            meta = {s: [(p, n) for _b, p, n in fs] for s, fs in rd.shard_files("docmeta").items()}
+
+        def paths(by_shard):
+            return {s: tuple(p for p, _n in fs) for s, fs in by_shard.items()}
+
+        return cls(
+            seg_paths=paths(seg),
+            terms=tuple(terms),
+            columns=_SEG_COLUMNS + (_POS_COLUMNS if with_positions else ()),
+            nbytes=sum(n for part in (seg, meta or {}) for fs in part.values() for _p, n in fs),
+            meta_paths=None if meta is None else paths(meta),
+            meta_filter=meta_filter,
+        )
+
+    def term_filter(self):
+        import pyarrow.dataset as ds
+
+        return ds.field("term").isin(list(self.terms))
+
+    def segments(self, shard: int):
+        """The shard's blocks of the query terms (pyarrow Table)."""
+        import pyarrow.dataset as ds
+
+        paths = self.seg_paths.get(shard)
+        if not paths:
+            return None
+        return ds.dataset(list(paths), format="parquet").to_table(
+            columns=list(self.columns), filter=self.term_filter()
+        )
+
+    def allowed(self, shard: int) -> np.ndarray | None:
+        """Sorted doc ids of the shard that pass the filter; None when
+        the query has no filter."""
+        f = self.meta_filter
+        if f is None:
+            return None
+        import pyarrow.dataset as ds
+
+        paths = self.meta_paths.get(shard)
+        if not paths:
+            return np.empty(0, dtype=np.int64)
+        tbl = ds.dataset(list(paths), format="parquet").to_table(
+            columns=f.columns(), filter=f.expression()
+        )
+        ids = tbl.column("doc_id").to_numpy()
+        if "ts" in tbl.column_names:
+            ids = ids[f.keep_ts(tbl.column("ts"))]
+        return np.sort(ids.astype(np.int64))
+
+
+# ---------------------------------------------------------------------------
+# per-shard scorer (runs inside the shard task, over the pyarrow read)
+# ---------------------------------------------------------------------------
+
+def _block_docs(rows: pd.DataFrame) -> np.ndarray:
+    """Doc ids of a term's blocks in block order (not globally sorted
+    when salted runs interleave): the doc stream alone, one varint pass."""
+    ns = rows["n"].to_numpy(dtype=np.int64)
+    block_starts = np.concatenate(([0], np.cumsum(ns)))[:-1]
+    # .view, not .astype: decoded values are < 2^63 (doc ids / tfs /
+    # dls), so the reinterpret is exact and skips three full-array
+    # copies per term in the bandwidth-bound scoring path
+    deltas = varint_decode(b"".join(rows["docs"])).view(np.int64)
+    c = np.cumsum(deltas)
+    base = c[block_starts] - deltas[block_starts]
+    return c - np.repeat(base, ns)
+
 
 def _decode_term_blocks(rows: pd.DataFrame, want_positions: bool):
     """Concatenate a term's (possibly salted) block runs into one sorted
@@ -205,15 +420,7 @@ def _decode_term_blocks(rows: pd.DataFrame, want_positions: bool):
     starts; the reset points are recovered from the per-block ``n``.
     positions is a ragged (counts, flat) pair, never Python lists.
     """
-    ns = rows["n"].to_numpy(dtype=np.int64)
-    block_starts = np.concatenate(([0], np.cumsum(ns)))[:-1]
-    # .view, not .astype: decoded values are < 2^63 (doc ids / tfs /
-    # dls), so the reinterpret is exact and skips three full-array
-    # copies per term in the bandwidth-bound scoring path
-    deltas = varint_decode(b"".join(rows["docs"])).view(np.int64)
-    c = np.cumsum(deltas)
-    base = c[block_starts] - deltas[block_starts]
-    docs = c - np.repeat(base, ns)
+    docs = _block_docs(rows)
     # bigram-sidecar blocks are membership-only (slim encode,
     # build._encode_group): their tf/dl streams are empty bytes —
     # decode as all-ones rather than an empty array so the shared
@@ -277,19 +484,22 @@ def _make_shard_scorer(
     safe_bounds: bool = False,
     neg_terms: tuple[str, ...] = (),
     phrase_plans: tuple | None = None,
-    emit_shard: bool = False,
+    want_total: bool = False,
 ):
-    """Returns the applyInPandas function scoring one shard's blocks.
+    """Returns ``score(pdf, allowed) -> (doc_ids, scores, hits)``, the
+    function a shard task runs over one shard's blocks of the query
+    terms (a pandas frame of the pyarrow read).
 
-    ``emit_shard`` adds the shard id to the output rows (schema
-    "shard int, doc_id long, score double") so the serving layer can
-    cache the PER-SHARD top-k heaps and compute how deep the merged
-    ranking is exact (deep pagination without growing-k re-runs).
+    ``allowed`` is the sorted array of the shard's FILTER-SURVIVING
+    doc ids (None without filters), so filtering happens shard-locally
+    and per-shard top-k truncation stays on — no untruncated candidate
+    set ever leaves a shard.
 
-    With metadata/date filters the function is used through cogroup:
-    the second frame carries the shard's FILTER-SURVIVING doc_ids, so
-    filtering happens shard-locally and per-shard top-k truncation
-    stays on — no untruncated candidate set ever leaves a shard.
+    ``hits`` is the shard's exact match count, taken before truncation:
+    free on the AND path (the candidate count) and on a union that
+    returned fewer than k rows (no block was skipped). A truncated
+    scored union counts it with a membership-only union only when
+    ``want_total`` is set; otherwise ``hits`` is None.
 
     ``phrase_plans`` (one per phrase, aligned with ``phrases``):
     (tokens, pairs, fully) where pairs[i] = (i, bigram_term | None) —
@@ -322,15 +532,10 @@ def _make_shard_scorer(
     idf = {m.term: m.idf for m in metas}
     req_order = sorted(required, key=lambda m: (m.df, m.term))  # rarest first
 
-    def _score(pdf: pd.DataFrame, allowed_pdf: pd.DataFrame | None = None) -> pd.DataFrame:
-        empty = pd.DataFrame({"doc_id": pd.Series(dtype="int64"), "score": pd.Series(dtype="float64")})
-        if emit_shard:
-            empty.insert(0, "shard", pd.Series(dtype="int32"))
-        allowed = None
-        if allowed_pdf is not None:
-            allowed = np.sort(allowed_pdf["doc_id"].to_numpy(dtype=np.int64))
-            if allowed.size == 0:
-                return empty
+    def _score(pdf: pd.DataFrame, allowed: np.ndarray | None = None):
+        empty = (np.empty(0, dtype=np.int64), np.empty(0, dtype=np.float64), 0)
+        if allowed is not None and allowed.size == 0:
+            return empty
         by_term = {t: g for t, g in pdf.groupby("term")}
         # must_not postings never score: peel them off before any path
         # looks at by_term. Their blocks are decoded candidate-pruned
@@ -372,7 +577,7 @@ def _make_shard_scorer(
                     score += _bm25(tfv, dlv, m.idf, avgdl)
                 elif m.term in by_term:
                     score += _optional_contrib(by_term[m.term], cand)
-            out_docs, out_scores = cand, score
+            out_docs, out_scores, hits = cand, score, cand.size
         else:
             # scored union (OR / boost-only): block-max WAND
             # must_not inside the union loop (NOT post-hoc: an excluded
@@ -383,11 +588,16 @@ def _make_shard_scorer(
             neg_arrays = [
                 _decode_term_blocks(g, False)[0] for g in neg.values()
             ] if neg else []
-            out_docs, out_scores = _bmw_union(
-                by_term, [m for m in metas if m.term in by_term], allowed, neg_arrays
-            )
+            present = [m for m in metas if m.term in by_term]
+            out_docs, out_scores = _bmw_union(by_term, present, allowed, neg_arrays)
             if out_docs.size == 0:
                 return empty
+            if not truncate or out_docs.size < k:
+                hits = out_docs.size  # nothing was skipped
+            elif want_total:
+                hits = _union_count(by_term, present, allowed, neg_arrays)
+            else:
+                hits = None
 
         if truncate and out_docs.size > k:
             # per-shard top-k: order by the ROUNDED score (score_e6) the
@@ -396,10 +606,7 @@ def _make_shard_scorer(
             # tie-break
             order = np.lexsort((out_docs, -np.round(out_scores * 1e6)))[:k]
             out_docs, out_scores = out_docs[order], out_scores[order]
-        out = pd.DataFrame({"doc_id": out_docs.astype(np.int64), "score": out_scores})
-        if emit_shard:
-            out.insert(0, "shard", np.int32(pdf["shard"].iloc[0]))
-        return out
+        return out_docs.astype(np.int64), out_scores, hits
 
     def _member_mask(docs, allowed):
         idx = np.searchsorted(allowed, docs)
@@ -420,15 +627,16 @@ def _make_shard_scorer(
             mask |= _member_mask(docs, ndocs)
         return mask
 
-    # applyInPandas arity is semantic: 1-arg = (pdf), 2-arg = (key, pdf);
-    # cogroup 2-arg = (left, right) — expose explicit wrappers
-    def score_shard(pdf: pd.DataFrame) -> pd.DataFrame:
-        return _score(pdf, None)
-
-    def score_shard_cogrouped(left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:
-        return _score(left, right)
-
-    score_shard.cogrouped = score_shard_cogrouped
+    def _union_count(by_term, present, allowed, neg_arrays):
+        """Exact size of the filtered union: doc streams only, no
+        scoring and no block skipping."""
+        docs = np.unique(np.concatenate([_block_docs(by_term[m.term]) for m in present]))
+        if allowed is not None:
+            docs = docs[_member_mask(docs, allowed)]
+        for narr in neg_arrays:
+            if narr.size:
+                docs = docs[~_member_mask(docs, narr)]
+        return int(docs.size)
 
     # -- helpers bound to closure -------------------------------------------
 
@@ -736,7 +944,7 @@ def _make_shard_scorer(
                 theta_e6 = float(np.round(top_scores * 1e6).min())
         return top_docs, top_scores
 
-    return score_shard
+    return _score
 
 
 # ---------------------------------------------------------------------------
@@ -788,22 +996,29 @@ def _cached_reader(spark: SparkSession, index_dir: str) -> IndexReader:
     return rd
 
 
-def _candidates(
+PASS_SCHEMA = "shard int, doc_id long, score double, hits long"
+
+
+def _shard_pass(
     spark: SparkSession, rd: IndexReader, spec: QuerySpec, truncate: bool,
-    emit_shard: bool = False,
-) -> DataFrame | None:
-    """Shared candidate pipeline of search() and matching_doc_ids():
-    dictionary lookup → segment scan (bucket-pruned) → shard-local
-    scoring applyInPandas (cogrouped with the filtered docmeta when
-    F2/F5 filters are present). ``truncate`` keeps the per-shard top-k
-    heap on (ranked search) or off (full doc-set). Returns None when a
-    required term is absent from the collection (AND → no hits)."""
+    want_total: bool = False,
+) -> tuple[DataFrame, float] | None:
+    """The one shard pass behind every ranked, count and id request:
+    dictionary lookup → ShardScan plan (driver) → ``spark.range(
+    n_shards)`` → ``mapInArrow``, one task per group of shards, each
+    reading and scoring its own shards. Rows: (shard, doc_id, score,
+    hits), the shard's top-k (``truncate``) or every match, each row
+    carrying the shard's exact match count (see _make_shard_scorer).
+
+    Returns (frame, id_bound) — ``id_bound`` is the dictionary-df upper
+    bound on the number of matching docs (min df over the required
+    terms; the sum of df over a union) — or None when a required term
+    is absent from the collection (AND → no hits)."""
     if spec.phrases and not rd.man.config.get("with_positions", True):
         raise ValueError(
             f"index at {rd.index_dir} was built with with_positions=False; "
             "phrase queries need a positions-bearing index"
         )
-    has_filters = bool(spec.role_filter or spec.tool_filter or spec.ts_from or spec.ts_to)
     required = list(spec.all_scored_terms())
     boost = [t for t in spec.boost_terms if t not in required]
     if any(t in spec.not_terms for t in required):
@@ -845,6 +1060,8 @@ def _candidates(
         # required terms)
         return None
     all_terms = [t for t in all_terms if t in dict_rows]
+    if not all_terms:
+        return None  # a union of terms absent from the collection
     # a must_not term absent from the collection excludes nothing; a
     # negated boost term stays in the fetch list only once (the scorer
     # peels its postings into the neg set before any scoring looks)
@@ -858,131 +1075,195 @@ def _candidates(
         )
         for t in all_terms
     ]
-    fetch_terms = all_terms + [t for t in neg if t not in all_terms] + bigram_fetch
-    seg = rd.segments_for(fetch_terms, with_positions=bool(spec.phrases))
-    scorer = _make_shard_scorer(
-        metas, spec.phrases, rd.avgdl, spec.k, truncate=truncate,
-        safe_bounds=rd.multi, neg_terms=neg, phrase_plans=phrase_plans,
-        emit_shard=emit_shard,
+    bound = (
+        min(dict_rows[t][0] for t in required)
+        if required
+        else sum(dict_rows[t][0] for t in all_terms)
     )
-    schema = ("shard int, " if emit_shard else "") + "doc_id long, score double"
-    if has_filters:
-        # shard-local filtering: cogroup the shard's blocks with its
-        # filter-surviving doc_ids (docmeta is shard-partitioned, so
-        # the filter scan prunes columns + pushes predicates); with
-        # truncate on, only k rows leave each shard
-        meta = _apply_meta_filters(rd.docmeta(), spec).select("shard", "doc_id")
-        return (
-            seg.groupBy("shard")
-            .cogroup(meta.groupBy("shard"))
-            .applyInPandas(scorer.cogrouped, schema)
+    fetch_terms = all_terms + [t for t in neg if t not in all_terms] + bigram_fetch
+    scan = ShardScan.plan(
+        rd, fetch_terms, bool(spec.phrases), _meta_filter(spark, spec)
+    )
+    # k >= 1: a shard with matches always returns a row, so its hits
+    # reach the driver even for a k=0 request
+    score = _make_shard_scorer(
+        metas, spec.phrases, rd.avgdl, max(spec.k, 1), truncate=truncate,
+        safe_bounds=rd.multi, neg_terms=neg, phrase_plans=phrase_plans,
+        want_total=want_total,
+    )
+
+    def run(batches):
+        import pyarrow as pa
+
+        for batch in batches:
+            for shard in batch.column(0).to_pylist():
+                allowed = scan.allowed(shard)
+                if allowed is not None and allowed.size == 0:
+                    continue
+                tbl = scan.segments(shard)
+                if tbl is None or tbl.num_rows == 0:
+                    continue
+                docs, scores, hits = score(tbl.to_pandas(), allowed)
+                if docs.size == 0:
+                    continue
+                n = docs.size
+                yield pa.RecordBatch.from_arrays(
+                    [
+                        pa.array(np.full(n, shard, dtype=np.int32)),
+                        pa.array(docs),
+                        pa.array(scores),
+                        pa.nulls(n, pa.int64()) if hits is None
+                        else pa.array(np.full(n, hits, dtype=np.int64)),
+                    ],
+                    names=["shard", "doc_id", "score", "hits"],
+                )
+
+    # one task per maxPartitionBytes of files read, as Spark splits a
+    # file scan, up to one per shard and per core: a Python task costs
+    # tens of ms of dispatch (and its wind-down slows the request's next
+    # job), so a small index scores all its shards in one task
+    per_task = spark._jsparkSession.sessionState().conf().filesMaxPartitionBytes()
+    n = rd.n_shards
+    tasks = min(n, spark.sparkContext.defaultParallelism, -(-scan.nbytes // per_task))
+    frame = spark.range(n, numPartitions=max(tasks, 1)).mapInArrow(run, PASS_SCHEMA)
+    return frame, float(bound)
+
+
+def _score_e6():
+    return F.round(F.col("score") * 1e6).cast("long").alias("score_e6")
+
+
+def _hinted_ids(spark: SparkSession, ids: DataFrame, bound: float) -> DataFrame:
+    """Join strategy for an id frame from the shard pass. Its planner
+    size estimate is spark.range's (a few bytes), so Spark would always
+    broadcast it; broadcast only when the dictionary-df bound on its row
+    count (8 B per id) is under autoBroadcastJoinThreshold, and hash-
+    shuffle it otherwise."""
+    limit = spark._jsparkSession.sessionState().conf().autoBroadcastJoinThreshold()
+    return ids.hint("broadcast" if bound * 8 < limit else "shuffle_hash")
+
+
+def _match_all(spark: SparkSession, rd: IndexReader, spec: QuerySpec) -> DataFrame:
+    """doc_id of a no-scored-term spec (match_all / filters-only /
+    not-only) from docmeta alone, JVM-only: the filtered docmeta minus
+    the neg union's ids (anti-join against the index's postings — text
+    never read)."""
+    out = _apply_meta_filters(rd.docmeta(), spec).select("doc_id")
+    if spec.not_terms:
+        got = _shard_pass(
+            spark, rd, QuerySpec(boost_terms=tuple(spec.not_terms)), truncate=False
         )
-    return seg.groupBy("shard").applyInPandas(scorer, schema)
+        if got is not None:
+            ex, bound = got
+            out = out.join(_hinted_ids(spark, ex.select("doc_id"), bound), "doc_id", "left_anti")
+    return out
+
+
+def _scored(spec: QuerySpec) -> bool:
+    return bool(spec.all_scored_terms() or spec.boost_terms)
 
 
 def search(
     spark: SparkSession, index_dir: str, spec: QuerySpec, reader: IndexReader | None = None
 ) -> DataFrame:
-    """Top-k search against a built index. Returns (doc_id, score_e6)."""
+    """Top-k search against a built index. Returns (doc_id, score_e6):
+    the shard pass plus the global orderBy().limit() merge."""
     from newsleak_spark.session import ensure_workers_can_import
 
     ensure_workers_can_import(spark)
     rd = reader or _cached_reader(spark, index_dir)
-
-    if not spec.all_scored_terms() and not spec.boost_terms:
-        # match_all / filters-only: no scoring, pinned score 1.0; a
-        # not-only query is match_all minus the neg union doc set
-        # (anti-join against the index's postings — text never read)
-        out = _apply_meta_filters(rd.docmeta(), spec).select(
+    if not _scored(spec):
+        # match_all / filters-only: no scoring, pinned score 1.0
+        out = _match_all(spark, rd, spec).select(
             "doc_id", F.lit(1_000_000).cast("long").alias("score_e6")
         )
-        if spec.not_terms:
-            neg_spec = QuerySpec(boost_terms=tuple(spec.not_terms))
-            ex = _candidates(spark, rd, neg_spec, truncate=False)
-            if ex is not None:
-                out = out.join(ex.select("doc_id"), "doc_id", "left_anti")
-        return out.orderBy(F.desc("score_e6"), F.asc("doc_id")).limit(spec.k)
-
-    cand = _candidates(spark, rd, spec, truncate=True)
-    if cand is None:
-        # a required term is absent from the collection → no hits (AND)
-        return spark.createDataFrame([], "doc_id long, score_e6 long")
-    out = cand.select("doc_id", F.round(F.col("score") * 1e6).cast("long").alias("score_e6"))
+    else:
+        got = _shard_pass(spark, rd, spec, truncate=True)
+        if got is None:
+            return spark.createDataFrame([], "doc_id long, score_e6 long")
+        out = got[0].select("doc_id", _score_e6())
     return out.orderBy(F.desc("score_e6"), F.asc("doc_id")).limit(spec.k)
 
 
 def search_heaps(
-    spark: SparkSession, index_dir: str, spec: QuerySpec, reader: IndexReader | None = None
+    spark: SparkSession, index_dir: str, spec: QuerySpec, reader: IndexReader | None = None,
+    with_total: bool = False,
 ) -> DataFrame | None:
-    """Per-shard top-k heaps for deep pagination: (shard, doc_id,
-    score_e6), each shard's top-spec.k by the global sort key. The
-    SERVING layer merges these driver-side and can answer any page
-    whose rank is provably exact from the heaps alone — the
-    distributed analog of the reference's SearchHitIterator cursor
-    (SearchHitIterator.scala:43-58): one scan, then O(pages) slicing,
-    instead of re-running the whole top-k at growing k per page.
+    """The shard pass itself, for deep pagination and totals: (shard,
+    doc_id, score_e6, hits), each shard's top-spec.k by the global sort
+    key plus its exact match count (null for a truncated scored union
+    unless ``with_total``). The SERVING layer merges these driver-side
+    and can answer any page whose rank is provably exact from the heaps
+    alone — the distributed analog of the reference's SearchHitIterator
+    cursor (SearchHitIterator.scala:43-58): one scan, then O(pages)
+    slicing, instead of re-running the whole top-k at growing k per
+    page — and takes the total from the same rows (heap_total).
 
     Exactness bound (computed by the caller from these rows): a doc a
-    TRUNCATED shard did not return ranks strictly after that shard's
-    k-th returned row, so the merged ranking is exact through every
-    position whose key sorts <= the minimum truncated-shard boundary
-    key. Returns None for no-scored-term (match_all / filters-only)
-    specs — those page through docmeta directly."""
+    TRUNCATED shard (hits > rows returned) did not return ranks strictly
+    after that shard's k-th returned row, so the merged ranking is exact
+    through every position whose key sorts <= the minimum truncated-
+    shard boundary key. Returns None for no-scored-term (match_all /
+    filters-only) specs — those page through docmeta directly."""
     from newsleak_spark.session import ensure_workers_can_import
 
-    if not spec.all_scored_terms() and not spec.boost_terms:
+    if not _scored(spec):
         return None
     ensure_workers_can_import(spark)
     rd = reader or _cached_reader(spark, index_dir)
-    cand = _candidates(spark, rd, spec, truncate=True, emit_shard=True)
-    if cand is None:
-        return spark.createDataFrame([], "shard int, doc_id long, score_e6 long")
-    return cand.select(
-        "shard", "doc_id", F.round(F.col("score") * 1e6).cast("long").alias("score_e6")
-    )
+    got = _shard_pass(spark, rd, spec, truncate=True, want_total=with_total)
+    if got is None:
+        return spark.createDataFrame([], "shard int, doc_id long, score_e6 long, hits long")
+    return got[0].select("shard", "doc_id", _score_e6(), "hits")
+
+
+def heap_total(hrows: list) -> int | None:
+    """Total matching docs from collected search_heaps rows: the sum of
+    the per-shard exact counts (a shard with no row matched nothing);
+    None when some shard's count is unknown."""
+    hits = {r["shard"]: r["hits"] for r in hrows}
+    return None if None in hits.values() else sum(hits.values())
 
 
 def matching_doc_ids(
     spark: SparkSession, index_dir: str, spec: QuerySpec, reader: IndexReader | None = None
 ) -> DataFrame:
-    """The UNTRUNCATED matching doc-id set from the INDEX alone — same
-    shard-local intersection/filter machinery as search() with the
-    per-shard top-k heap off. Never touches the text column (docmeta
-    scans are column-pruned), unlike a brute matching_docs() scan which
+    """The UNTRUNCATED matching doc-id set from the INDEX alone — the
+    shard pass with the per-shard top-k heap off, emitting ids. Never
+    touches the text column, unlike a brute matching_docs() scan which
     re-tokenizes the collection; this is the index-accelerated doc-set
     feed for aggregation endpoints (facets/timeline/network over a
-    query-filtered corpus). Returns DataFrame(doc_id long)."""
+    query-filtered corpus). The frame carries its join hint
+    (_hinted_ids). Returns DataFrame(doc_id long)."""
     from newsleak_spark.session import ensure_workers_can_import
 
     ensure_workers_can_import(spark)
     rd = reader or _cached_reader(spark, index_dir)
-
-    if not spec.all_scored_terms() and not spec.boost_terms:
-        out = _apply_meta_filters(rd.docmeta(), spec).select("doc_id")
-        if spec.not_terms:
-            neg_spec = QuerySpec(boost_terms=tuple(spec.not_terms))
-            ex = _candidates(spark, rd, neg_spec, truncate=False)
-            if ex is not None:
-                out = out.join(ex.select("doc_id"), "doc_id", "left_anti")
-        return out
-
-    cand = _candidates(spark, rd, spec, truncate=False)
-    if cand is None:
+    if not _scored(spec):
+        return _match_all(spark, rd, spec)
+    got = _shard_pass(spark, rd, spec, truncate=False)
+    if got is None:
         return spark.createDataFrame([], "doc_id long")
-    return cand.select("doc_id")
+    frame, bound = got
+    return _hinted_ids(spark, frame.select("doc_id"), bound)
 
 
 def count_hits(
     spark: SparkSession, index_dir: str, spec: QuerySpec, reader: IndexReader | None = None
 ) -> int:
-    """Total matching-doc count (G9 / getTotalHits) from the index."""
-    return matching_doc_ids(spark, index_dir, spec, reader).count()
+    """Total matching-doc count (G9 / getTotalHits) from the index: the
+    sum of the per-shard hits of a k=1 shard pass; match_all /
+    filters-only specs count docmeta rows (JVM-only)."""
+    heaps = search_heaps(spark, index_dir, replace(spec, k=1), reader, with_total=True)
+    if heaps is None:
+        return matching_doc_ids(spark, index_dir, spec, reader).count()
+    return heap_total(heaps.collect())
 
 
 def _apply_meta_filters(meta: DataFrame, spec: QuerySpec) -> DataFrame:
-    # single source of truth for F2/F5 semantics: the brute path's
-    # filter (the engine's rank-identity oracle) — divergence here would
-    # silently break filtered-query parity
+    # single source of truth for F2/F5 semantics on the JVM path: the
+    # brute path's filter (the engine's rank-identity oracle); the shard
+    # tasks apply the same semantics through MetaFilter
     from newsleak_spark.query.brute import _apply_filters
 
     return _apply_filters(meta, spec)

@@ -86,6 +86,8 @@ def test_count_hits_matches_matching_docs(spark, api, transcripts, index_dir):
         QuerySpec(terms=("merge", "window")),
         QuerySpec(phrases=(("fast", "table"),)),
         QuerySpec(terms=("table",), role_filter=("user",)),
+        QuerySpec(terms=("table",), not_terms=("join",), role_filter=("user",)),
+        QuerySpec(not_terms=("table",), role_filter=("user",)),  # filtered not-only
         QuerySpec(terms=(), boost_terms=("merge", "window")),  # should-only
         QuerySpec(),  # match_all
     ]:
@@ -205,28 +207,66 @@ def test_get_docs_hit_cache_across_pages(spark, transcripts):
 
 
 def test_merge_heaps_exactness_bound():
-    """_merge_heaps unit semantics: the merged ranking is exact through
-    the minimum truncated-shard boundary key; untruncated shards are
-    exhaustive."""
+    """_merge_heaps unit semantics: a shard is truncated when its exact
+    match count exceeds the rows it returned (unknown count: when it
+    returned k rows); the merged ranking is exact through the minimum
+    truncated-shard boundary key; untruncated shards are exhaustive."""
     from newsleak_spark.api import _merge_heaps
 
-    mk = lambda s, d, sc: {"shard": s, "doc_id": d, "score_e6": sc}
-    # k=2: shard 0 truncated (2 rows, weakest score 80), shard 1
-    # exhausted (1 row). Rows scoring >= 80 are exact; doc 4 (score 70)
-    # could be displaced by shard 0's unreturned docs.
-    rows = [mk(0, 1, 100), mk(0, 2, 80), mk(1, 3, 90), mk(1, 4, 70)]
+    mk = lambda s, d, sc, hits: {"shard": s, "doc_id": d, "score_e6": sc, "hits": hits}
+    # k=2: both shards truncated (2 rows each of 5 and 3 matches); the
+    # MOST RESTRICTIVE boundary is shard 0's (score 80): an unreturned
+    # shard-0 doc could score 79 and displace doc 4 (score 70), so only
+    # the first 3 positions are exact
+    rows = [mk(0, 1, 100, 5), mk(0, 2, 80, 5), mk(1, 3, 90, 3), mk(1, 4, 70, 3)]
     merged, safe = _merge_heaps(rows, 2)
     assert [r["doc_id"] for r in merged] == [1, 3, 2, 4]
-    # both shards truncated; the MOST RESTRICTIVE boundary is shard 0's
-    # (score 80): an unreturned shard-0 doc could score 79 and displace
-    # doc 4 (score 70), so only the first 3 positions are exact
     assert safe == 3
     # only shard 0 truncated: boundary (80, 2) -> exact through doc 2
-    merged, safe = _merge_heaps([mk(0, 1, 100), mk(0, 2, 80), mk(1, 3, 90)], 2)
+    merged, safe = _merge_heaps([mk(0, 1, 100, 5), mk(0, 2, 80, 5), mk(1, 3, 90, 1)], 2)
     assert safe == 3
+    # exactly k matches: shard 0 returned k=2 rows and has 2 hits, so it
+    # is exhaustive, not truncated
+    rows = [mk(0, 1, 100, 2), mk(0, 2, 80, 2), mk(1, 3, 90, 1)]
+    assert _merge_heaps(rows, 2)[1] == float("inf")
+    # unknown count (a scored union served without its total): k rows
+    # returned counts as truncated, fewer as exhaustive
+    rows = [mk(0, 1, 100, None), mk(0, 2, 80, None), mk(1, 3, 90, 1)]
+    assert _merge_heaps(rows, 2)[1] == 3
+    assert _merge_heaps(rows, 3)[1] == float("inf")
     # no shard truncated: exhaustive
-    _merged, safe = _merge_heaps([mk(0, 1, 100), mk(1, 3, 90)], 5)
+    _merged, safe = _merge_heaps([mk(0, 1, 100, 1), mk(1, 3, 90, 1)], 5)
     assert safe == float("inf")
+
+
+def test_get_docs_total_rides_the_heaps(spark, transcripts, index_dir, monkeypatch):
+    """get_docs takes its page AND its total from one search_heaps pass:
+    no separate count job, and a later page the cached heaps answer —
+    with or without the total — runs no new scoring job."""
+    from newsleak_spark import api as api_mod
+
+    def no_count(*_a, **_k):
+        raise AssertionError("count_hits ran for a scored query")
+
+    monkeypatch.setattr(api_mod, "count_hits", no_count)
+    api = NewsleakAPI(spark, transcripts, index_dir)
+    for query, spec in [
+        ("table", QuerySpec(terms=("table",))),
+        ("table -join", QuerySpec(terms=("table",), not_terms=("join",), role_filter=("user",))),
+    ]:
+        roles = spec.role_filter
+        want = matching_docs(transcripts, spec).count()
+        runs = api.topk_runs
+        deep = api.get_docs(query, roles=roles, page=2, page_size=5, highlight=False)
+        assert api.topk_runs == runs + 1 and deep["hits"] == want
+        p1 = api.get_docs(query, roles=roles, page=1, page_size=5, highlight=False)
+        assert api.topk_runs == runs + 1 and p1["hits"] == want
+    # heaps cached without the total answer a later with_total page
+    runs = api.topk_runs
+    api.get_docs("merge", page=2, page_size=5, with_total=False, highlight=False)
+    out = api.get_docs("merge", page=1, page_size=5, highlight=False)
+    assert api.topk_runs == runs + 1
+    assert out["hits"] == matching_docs(transcripts, QuerySpec(terms=("merge",))).count()
 
 
 def test_indexed_pagination_vs_full_rank(spark, transcripts, index_dir):

@@ -56,6 +56,65 @@ def test_engine_matches_brute(spark, transcripts, index_dir, spec):
         assert abs(gs - ws) <= 1, f"score mismatch doc {gd}: {gs} vs {ws}"
 
 
+def test_pass_split_matches_brute(spark, transcripts, index_dir):
+    """The shard pass runs one task per maxPartitionBytes of files read,
+    up to one per shard and per core: this small index scores every
+    shard in one task, and a tiny split size gives one task per shard.
+    Results and totals do not depend on the split."""
+    import contextlib
+    import io
+    import re
+
+    from newsleak_spark.query.brute import matching_docs
+    from newsleak_spark.query.engine import count_hits
+
+    def splits(df) -> int:
+        buf = io.StringIO()
+        with contextlib.redirect_stdout(buf):
+            df.explain()
+        return int(re.search(r"splits=(?:Some\()?(\d+)", buf.getvalue())[1])
+
+    spec0 = QuerySpec(terms=("spark",), k=10)
+    assert splits(search(spark, index_dir, spec0)) == 1
+    key = "spark.sql.files.maxPartitionBytes"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "1k")
+    try:
+        assert splits(search(spark, index_dir, spec0)) == 4
+        for spec in SPECS:
+            got = [(r.doc_id, r.score_e6) for r in search(spark, index_dir, spec).collect()]
+            want = [(r.doc_id, r.score_e6) for r in bm25_topk(transcripts, spec).collect()]
+            assert got == want, spec
+            if spec.all_scored_terms() or spec.boost_terms:
+                assert count_hits(spark, index_dir, spec) == matching_docs(transcripts, spec).count()
+    finally:
+        spark.conf.set(key, old)
+
+
+def test_ts_filter_in_session_time_zone(spark, transcripts, index_dir):
+    """F5 dates are local dates in the session time zone on both paths:
+    the shard task's docmeta filter matches the brute cast to date."""
+    import pyarrow as pa
+
+    from newsleak_spark.query.engine import MetaFilter
+
+    # 03:00 UTC on Jan 2 is still Jan 1 in Los Angeles, Jan 2 at +08:00
+    ts = pa.array([dt.datetime(2020, 1, 2, 3, 0)], pa.timestamp("us", tz="UTC"))
+    day = (dt.date(2020, 1, 2) - dt.date(1970, 1, 1)).days
+    assert MetaFilter(day_from=day).keep_ts(ts).tolist() == [True]
+    assert MetaFilter(day_from=day, zone="America/Los_Angeles").keep_ts(ts).tolist() == [False]
+    assert MetaFilter(day_from=day, day_to=day, zone=8 * 3600).keep_ts(ts).tolist() == [True]
+    key = "spark.sql.session.timeZone"
+    spark.conf.set(key, "America/Los_Angeles")
+    try:
+        spec = QuerySpec(terms=("row",), ts_from=dt.date(2018, 6, 1), ts_to=dt.date(2020, 6, 30), k=50)
+        got = [(r.doc_id, r.score_e6) for r in search(spark, index_dir, spec).collect()]
+        want = [(r.doc_id, r.score_e6) for r in bm25_topk(transcripts, spec).collect()]
+        assert got == want
+    finally:
+        spark.conf.set(key, "UTC")
+
+
 def test_manifest_stats(spark, transcripts, index_dir):
     rd = IndexReader(spark, index_dir)
     assert rd.n_docs == transcripts.count()

@@ -10,7 +10,8 @@ from pyspark.sql import functions as F
 
 from newsleak_spark.indexing import IndexConfig, append_index, build_index, list_deltas
 from newsleak_spark.query import QuerySpec
-from newsleak_spark.query.engine import IndexReader, search
+from newsleak_spark.query.brute import matching_docs
+from newsleak_spark.query.engine import IndexReader, count_hits, search
 
 CFG = IndexConfig(n_shards=4, n_term_buckets=4, block_size=16, hot_df_ratio=0.3, n_salts=4)
 
@@ -47,12 +48,14 @@ def test_combined_stats_equal_full(spark, dirs):
 
 
 @pytest.mark.parametrize("i", range(len(SPECS)))
-def test_delta_results_rank_identical(spark, dirs, i):
+def test_delta_results_rank_identical(spark, transcripts, dirs, i):
     full_dir, inc_dir = dirs
     spec = SPECS[i]
     full = [(r["doc_id"], r["score_e6"]) for r in search(spark, full_dir, spec).collect()]
     inc = [(r["doc_id"], r["score_e6"]) for r in search(spark, inc_dir, spec).collect()]
     assert inc == full
+    # the shard pass reads every part: base+delta totals are exact
+    assert count_hits(spark, inc_dir, spec) == matching_docs(transcripts, spec).count()
 
 
 def test_append_registration_idempotent(spark, dirs):

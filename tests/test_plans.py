@@ -14,7 +14,8 @@ import pytest
 
 from newsleak_spark.indexing import IndexConfig, build_index
 from newsleak_spark.query import QuerySpec, bm25_topk
-from newsleak_spark.query.engine import IndexReader, search
+from newsleak_spark.query import engine
+from newsleak_spark.query.engine import IndexReader, ShardScan, search
 
 
 def plan_of(df, mode: str = "formatted") -> str:
@@ -32,34 +33,65 @@ def index_dir(spark, transcripts, tmp_path_factory):
     return d
 
 
-def test_segment_scan_partition_pruned(spark, index_dir):
-    """A query's segment scan must touch only the buckets of its query
-    terms (hive partition pruning) and push the term predicate to
-    parquet row groups (the term-sorted layout makes min/max effective)."""
+def _planned_scans(monkeypatch) -> list:
+    """Record every ShardScan the engine plans."""
+    seen = []
+    orig = ShardScan.plan.__func__
+
+    def plan(cls, *a, **kw):
+        seen.append(orig(cls, *a, **kw))
+        return seen[-1]
+
+    monkeypatch.setattr(ShardScan, "plan", classmethod(plan))
+    return seen
+
+
+def test_segment_scan_partition_pruned(spark, index_dir, monkeypatch):
+    """Each shard task reads only its shard's files of the query terms'
+    buckets, across every part (partition pruning on the driver's file
+    listing), and pushes the term predicate into the pyarrow scan
+    (row-group pruning on the term-sorted layout)."""
     rd = IndexReader(spark, index_dir)
-    seg = rd.segments_for(["spark"], with_positions=False)
-    plan = plan_of(seg)
-    assert "PartitionFilters" in plan and "bucket" in plan.split("PartitionFilters", 1)[1].split("]", 1)[0]
-    pushed = plan.split("PushedFilters", 1)[1].split("]", 1)[0]
-    assert "term" in pushed, plan
+    scans = _planned_scans(monkeypatch)
+    search(spark, index_dir, QuerySpec(terms=("spark",), k=10), reader=rd).collect()
+    (scan,) = scans
+    b = engine._bucket("spark", rd.n_buckets)
+    every = rd.shard_files("segments")
+    assert set(scan.seg_paths) == set(every) == set(range(rd.n_shards))
+    for s, paths in scan.seg_paths.items():
+        assert paths and all(f"/shard={s}/bucket={b}/" in p for p in paths)
+        assert len(paths) < len(every[s])
+    assert str(scan.term_filter()).startswith("is_in(term"), scan.term_filter()
+    assert set(scan.segments(0).column("term").to_pylist()) == {"spark"}
 
 
-def test_segment_scan_drops_position_columns(spark, index_dir):
-    """Term-only queries must not read position bytes (SURVEY §7.5.5)."""
-    rd = IndexReader(spark, index_dir)
-    plan = plan_of(rd.segments_for(["spark"], with_positions=False))
-    schema = plan.split("ReadSchema", 1)[1].splitlines()[0]
-    assert "posflat" not in schema and "poscnt" not in schema
+def test_segment_scan_drops_position_columns(spark, index_dir, monkeypatch):
+    """Term-only queries must not read position bytes (SURVEY §7.5.5);
+    phrase queries do."""
+    scans = _planned_scans(monkeypatch)
+    search(spark, index_dir, QuerySpec(terms=("spark",), k=10)).collect()
+    search(spark, index_dir, QuerySpec(phrases=(("fast", "table"),), k=10)).collect()
+    term_only, phrase = scans
+    assert not {"poscnt", "posflat"} & set(term_only.segments(0).column_names)
+    assert {"poscnt", "posflat"} <= set(phrase.segments(0).column_names)
 
 
-def test_search_plan_shape(spark, index_dir):
-    """Engine search = one scoring exchange (shard-keyed applyInPandas)
-    + the global top-k merge; no sort-merge join anywhere."""
-    plan = plan_of(search(spark, index_dir, QuerySpec(terms=("spark",), k=10)))
-    assert "TakeOrderedAndProject" in plan
-    assert "SortMergeJoin" not in plan
-    # one exchange for the shard cogroup/groupBy; AQE may add none other
-    assert plan.count("Exchange") <= 2, plan
+@pytest.mark.parametrize(
+    "spec",
+    [
+        QuerySpec(terms=("spark",), k=10),
+        QuerySpec(terms=("table",), role_filter=("user",), k=10),
+        QuerySpec(phrases=(("fast", "table"),), k=10),
+    ],
+    ids=["unfiltered", "role_filtered", "phrase"],
+)
+def test_search_plan_shape(spark, index_dir, spec):
+    """Engine search = one shard pass (mapInArrow over the JVM-side
+    shard range) + the global top-k merge: no Exchange, no join."""
+    plan = plan_of(search(spark, index_dir, spec))
+    assert "TakeOrderedAndProject" in plan and "MapInArrow" in plan
+    assert "Join" not in plan
+    assert plan.count("Exchange") == 0, plan
 
 
 def test_brute_bm25_plan_broadcast_only(spark, transcripts):
@@ -168,16 +200,54 @@ def test_a10_single_scan_broadcast_only(spark):
     assert "BroadcastHashJoin" in plan
 
 
-def test_filtered_search_docmeta_pushdown(spark, index_dir):
-    """F2 filters reach the docmeta parquet scan as pushed predicates
-    (shard-local cogroup path)."""
+def test_filtered_search_docmeta_pushdown(spark, index_dir, monkeypatch):
+    """F2 filters run inside the shard task: the search plan scans no
+    docmeta on the JVM, the role IN-list is pushed into the task's
+    pyarrow docmeta read, and the surviving ids equal the JVM filter's
+    for the shard."""
+    from pyspark.sql import functions as F
+
     spec = QuerySpec(terms=("spark",), role_filter=("user",), k=10)
-    plan = plan_of(search(spark, index_dir, spec))
-    assert "PushedFilters" in plan
-    # role IN (...) must appear in some scan's pushed filters
-    assert any(
-        "role" in seg.split("]", 1)[0] for seg in plan.split("PushedFilters")[1:]
-    ), plan
+    assert "FileScan" not in plan_of(search(spark, index_dir, spec))
+    scans = _planned_scans(monkeypatch)
+    search(spark, index_dir, spec).collect()
+    (scan,) = scans
+    assert "role" in str(scan.meta_filter.expression())
+    rd = IndexReader(spark, index_dir)
+    for s in range(rd.n_shards):
+        want = (
+            rd.docmeta()
+            .filter((F.col("shard") == s) & F.col("role").isin("user"))
+            .select("doc_id")
+            .collect()
+        )
+        assert scan.allowed(s).tolist() == sorted(r["doc_id"] for r in want)
+
+
+def test_id_side_broadcast_bounded(spark, index_dir):
+    """The id frame of the shard pass is broadcast into the aggregation
+    semi-join (and the match-all '-term' anti-join) only when its
+    dictionary-df bound fits autoBroadcastJoinThreshold; above it the
+    id side is hash-shuffled, never broadcast."""
+    from newsleak_spark.api import NewsleakAPI
+
+    def broadcasts(df) -> int:
+        return plan_of(df, "simple").count("BroadcastExchange")
+
+    # a broadcast-free left side, so every BroadcastExchange is the ids'
+    docs = spark.range(100_000).withColumnRenamed("id", "doc_id")
+    api = NewsleakAPI(spark, docs, index_dir)
+    spec, not_only = QuerySpec(terms=("table",)), QuerySpec(not_terms=("table",))
+    assert broadcasts(api._matching(spec)) == 1
+    assert broadcasts(engine.matching_doc_ids(spark, index_dir, not_only)) == 1
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "16")
+    try:
+        for df in (api._matching(spec), engine.matching_doc_ids(spark, index_dir, not_only)):
+            assert broadcasts(df) == 0 and "ShuffledHashJoin" in plan_of(df, "simple")
+    finally:
+        spark.conf.set(key, old)
 
 
 def test_decontaminate_no_cartesian(spark):

@@ -14,11 +14,13 @@ from __future__ import annotations
 import importlib
 import json
 import sys
+from pathlib import Path
 
 import pytest
 
-sys.path.insert(0, "/root/repo")
-sys.path.insert(0, "/root/repo/tools")
+ROOT = Path(__file__).resolve().parents[1]
+sys.path.insert(0, str(ROOT))
+sys.path.insert(0, str(ROOT / "tools"))
 
 
 def _run(kind, n_turns, cores, n_wall, wall_4n, eff, inflight=None):

@@ -75,7 +75,7 @@ def _specs():
         # scored unions (block-max WAND)
         QuerySpec(terms=(), boost_terms=("w3", "w9", "w27"), k=20),
         QuerySpec(terms=(), boost_terms=("w5", "w11"), k=20),
-        # metadata-filtered (shard-local cogroup with docmeta)
+        # metadata-filtered (docmeta filtered inside the shard task)
         QuerySpec(terms=("w3",), role_filter=("user",), k=20),
         QuerySpec(terms=("w7",), role_filter=("user", "tool"), k=20),
         # must_not
@@ -281,7 +281,7 @@ def run(index_dir: str) -> dict:
         from newsleak_spark.indexing.manifest import Manifest
 
         series_turns = int(Manifest(index_dir).stats.get("n_docs") or N_TURNS)
-    except (OSError, ValueError, KeyError):
+    except (OSError, ValueError, KeyError, TypeError):
         series_turns = N_TURNS
     out = {
         "kind": KIND,
